@@ -9,8 +9,9 @@ import graft.transform.OpralogModels
 
 /** The `elt` CLI (R7, `elt-common/src/elt_common/cli.py:31-94`):
   * `ls` lists jobs, `run` executes one with domain-qualified ambiguous-name
-  * resolution; plus `transform` (the dbt-run equivalent) and `maintain`
-  * (R9 cron entry point).
+  * resolution; plus `transform` (the dbt-run equivalent), `test` (dbt
+  * test over what `transform` materialized) and `maintain` (R9 cron entry
+  * point).
   *
   * Jobs register in [[Cli.jobs]] keyed `{domain}/{name}` — the Scala shape
   * of the reference's `{warehouse}/ingest/{domain}/{source}` directory
@@ -121,9 +122,11 @@ object Cli {
       runTransform(spark, root, fullRefresh = true).keys.toSeq.sorted
         .foreach(m => println(s"$m: built (full refresh)"))
 
-    // `dbt test` equivalent: data tests over the built models (§5.4).
+    // `dbt test` equivalent (§5.4): data tests over the models `elt
+    // transform` last materialized — read in place, nothing rebuilt or
+    // written; a table model not materialized yet is built in memory.
     case Seq("test", root) =>
-      val built = runTransform(spark, root)
+      val built = runTransform(spark, root, materialize = false)
       val runnable = graft.transform.DataTests.fullSuite
         .filter { case (model, _, _) => built.contains(model) }
       val results = graft.transform.DataTests.run(built, runnable)
@@ -151,7 +154,7 @@ object Cli {
            |  ls <root>
            |  run <root> <job> [--backfill]
            |  transform <root> [--counts|--full-refresh]
-           |  test <root>
+           |  test <root>             (tests the models transform last materialized; writes nothing)
            |  sql <root> "<query>"   (tables as lake.<warehouse>.<namespace>.<table>)
            |  maintain <root> <warehouse> <namespace> [-r <N><d|h|m|s>]""".stripMargin)
       throw new IllegalArgumentException("bad usage")
@@ -171,9 +174,11 @@ object Cli {
 
   /** Run the model graph over whatever landing tables exist; targets are
     * the models whose sources are all present (dbt builds the subgraph the
-    * sources support). */
+    * sources support). `materialize = false` resolves the same models
+    * read-only ([[graft.transform.ModelGraph.resolve]]). */
   private def runTransform(spark: SparkSession, root: String,
-                           fullRefresh: Boolean = false): Map[String, org.apache.spark.sql.DataFrame] = {
+                           fullRefresh: Boolean = false,
+                           materialize: Boolean = true): Map[String, org.apache.spark.sql.DataFrame] = {
     val catalog = new LakeCatalog(s"$root/warehouses")
     val wh = "facility_ops_landing"
     val sourceTables = Seq(
@@ -197,9 +202,10 @@ object Cli {
         available.contains(n) || models.modelDeps(n).exists(_.forall(ok))
       ok(name)
     }
+    val target = (catalog, "facility_ops", "accelerator")
     if (buildable.isEmpty) Map.empty
-    else OpralogModels.graph.run(spark, sources,
-      catalog = Some((catalog, "facility_ops", "accelerator")),
+    else if (!materialize) models.resolve(spark, sources, target, buildable)
+    else models.run(spark, sources, catalog = Some(target),
       targets = buildable, fullRefresh = fullRefresh)
   }
 

@@ -79,19 +79,15 @@ object IngestRunner {
       val location = catalog.tableLocation(warehouse, namespace, res.name)
       var writeMode = res.writeProperties.writeMode
 
-      val schemaBefore: Option[String] =
-        if (LakeTable.exists(location))
-          Some(LakeTable.load(spark, location).metadata.schema.json)
+      // one metadata read serves both the schema baseline and the cursor
+      val metaBefore =
+        if (LakeTable.exists(location)) Some(LakeTable.load(spark, location).metadata)
         else None
-      val storedWatermark: Option[Watermark] = {
-        val fromTable =
-          if (LakeTable.exists(location))
-            LakeTable.load(spark, location).metadata.properties.get(PropertyWatermark)
-              .map(Watermark.deserialize)
-          else None
-        fromTable.orElse(
-          stateWatermarks.get(res.name).map(Watermark.deserialize))
-      }
+      val schemaBefore: Option[String] = metaBefore.map(_.schema.json)
+      val storedWatermark: Option[Watermark] =
+        metaBefore.flatMap(_.properties.get(PropertyWatermark))
+          .orElse(stateWatermarks.get(res.name))
+          .map(Watermark.deserialize)
 
       val watermarks = scala.collection.mutable.ListBuffer.empty[Watermark]
       res.extractor(storedWatermark).foreach { chunk0 =>

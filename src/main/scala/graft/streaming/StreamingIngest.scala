@@ -55,9 +55,8 @@ object StreamingIngest {
           if (!out.isEmpty) {
             val table = LakeTable.ensure(batch.sparkSession, tableLocation,
               out.schema, identifierFields = mergeOn)
-            // Mode-specific writer directly: write()'s merge dispatch
-            // re-probes df.isEmpty — a second take(1) job per drain on a
-            // frame this probe just proved non-empty.
+            // Mode-specific writer directly: the frame is proven non-empty,
+            // so write()'s skip-empty handling has nothing to add.
             if (writeMode == "merge") table.merge(out, mergeOn)
             else table.append(out)
           }
@@ -91,7 +90,7 @@ object StreamingIngest {
         if (!batch.isEmpty) {
           val table = LakeTable.ensure(batch.sparkSession, targetLocation,
             batch.schema, identifierFields = mergeOn)
-          table.merge(batch, mergeOn) // skip write()'s second isEmpty probe
+          table.merge(batch, mergeOn) // proven non-empty: no skip-empty needed
         }
       }
       .start()

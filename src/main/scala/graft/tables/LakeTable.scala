@@ -349,34 +349,37 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   // ---- write path ---------------------------------------------------
 
   /** Write-mode dispatcher with the reference's rules: zero-row data is
-    * skipped entirely (`io.py:86-88`), schema evolves add-only before any
-    * write, properties land in the same commit as the data. */
+    * skipped entirely (`io.py:86-88`), schema evolves add-only, properties
+    * land in the same commit as the data.
+    *
+    * L4 skip-empty is enforced AFTER the write for every mode, never by an
+    * isEmpty pre-probe, so the source plan executes exactly once: zero rows
+    * written -> the snapshot directory is removed and neither data nor
+    * schema evolution commits. For replace/merge the properties payload
+    * still commits (an index rebuild over an empty corpus must refresh its
+    * build stamp, not leave a stale one); a zero-row append commits
+    * nothing. */
   def write(df: DataFrame, mode: String,
             mergeOn: Seq[String] = Nil,
             properties: Map[String, String] = Map.empty): Unit = {
     mode match {
-      // L4 skip-empty for appends is enforced AFTER the write (zero rows
-      // written -> no commit, directory cleaned): an isEmpty pre-probe
-      // would execute the source plan twice per INSERT
       case "append" => append(df, properties)
-      case "replace" | "merge" if df.isEmpty =>
-        // L4: skip-empty (io.py:86-88) — data is skipped, but the
-        // properties payload still commits: an index rebuild over an empty
-        // corpus must refresh its build stamp, not leave a stale one.
-        // Unknown mode strings fall through to the error below even when
-        // the frame is empty.
-        if (properties.nonEmpty) writeProperties(properties)
-      case "replace" => replace(df, properties)
+      case "replace" =>
+        val (base, meta, pending) = pendingEvolution(df.schema)
+        commitData(df, "replace", keepExisting = false, properties,
+          preEvolved = Some((base, meta)), pendingSchema = pending, skipEmpty = true)
       case "merge" =>
         // Keyless merge falls back to the table's stored identifier fields
         // (reference: merge keys persisted at create, `helpers.py:184-187`,
         // read back to drive the upsert, `pyiceberg.py:358-361`).
         val keys = if (mergeOn.nonEmpty) mergeOn else metadata.identifierFields
-        if (keys.isEmpty)
+        if (keys.nonEmpty) upsert(df, keys, properties, skipEmpty = true)
+        // an empty frame is skipped before the key check can object
+        else if (df.isEmpty) commitProperties(properties)
+        else
           throw new IllegalArgumentException(
             s"Table '$location': write mode 'merge' requires 'merge_on' property " +
               "or identifier fields stored on the table.")
-        merge(df, keys, properties)
       case other => throw new IllegalArgumentException(s"Unsupported write mode: '$other'")
     }
   }
@@ -400,8 +403,16 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     * O(table) — Iceberg's upsert cost model (data files without matched
     * keys are never rewritten). */
   def merge(df: DataFrame, keys: Seq[String],
-            properties: Map[String, String] = Map.empty): Unit = {
-    val (base, meta) = evolveIfNeeded(df.schema)
+            properties: Map[String, String] = Map.empty): Unit =
+    upsert(df, keys, properties, skipEmpty = false)
+
+  /** [[merge]]; with `skipEmpty` (the `write` path, L4) a zero-row source
+    * commits only `properties`. The add-only schema evolution the source
+    * asks for commits after the write, so a skipped merge never evolves. */
+  private def upsert(df: DataFrame, keys: Seq[String],
+                     properties: Map[String, String], skipEmpty: Boolean): Unit = {
+    val (base, committed, pending) = pendingEvolution(df.schema)
+    val meta = pending.fold(committed)(s => committed.copy(schema = s))
     if (meta.currentSnapshot.forall(_.files.isEmpty)) {
       // Merge into an EMPTY table is insert-all: the full-outer join
       // against a zero-file target, the source bounds job and the
@@ -423,7 +434,8 @@ final class LakeTable private (spark: SparkSession, val location: String) {
             .otherwise(value) else value).as(c)
         }.toIndexedSeq: _*)
       try commitData(merged, "merge", keepExisting = false, properties,
-        preEvolved = Some((base, meta)))
+        preEvolved = Some((base, committed)), pendingSchema = pending,
+        skipEmpty = skipEmpty)
       catch {
         case e: Throwable if causeChain(e).exists(
             m => m != null && m.contains(DupMarker)) =>
@@ -436,7 +448,13 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     val alignedSrc = alignTo(df, meta.schema)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val bounds = sourceKeyBounds(alignedSrc, meta.schema, keys)
+      // the bounds job also counts the source: an empty one stops here
+      // (L4), without a second job to ask
+      val (bounds, sourceRows) = sourceKeyBounds(alignedSrc, meta.schema, keys)
+      if (skipEmpty && sourceRows == 0) {
+        commitProperties(properties)
+        return
+      }
       val zone = spark.sessionState.conf.sessionLocalTimeZone
       val (boundTouched, boundCarry) =
         meta.currentSnapshot.map(_.files).getOrElse(Nil).partition(f =>
@@ -474,7 +492,8 @@ final class LakeTable private (spark: SparkSession, val location: String) {
             .otherwise(value) else value).as(c)
         }.toIndexedSeq: _*)
       try commitData(merged, "merge", keepExisting = false, properties,
-        preEvolved = Some((base, meta)), carryFiles = untouched)
+        preEvolved = Some((base, committed)), carryFiles = untouched,
+        pendingSchema = pending)
       catch {
         case e: Throwable if causeChain(e).exists(
             m => m != null && m.contains(DupMarker)) =>
@@ -530,7 +549,7 @@ final class LakeTable private (spark: SparkSession, val location: String) {
       val (touched, untouched) =
         if (notMatchedBySource.nonEmpty) (files, Seq.empty[DataFile])
         else {
-          val bounds = sourceKeyBounds(srcK, meta.schema, keys)
+          val (bounds, _) = sourceKeyBounds(srcK, meta.schema, keys)
           val zone = spark.sessionState.conf.sessionLocalTimeZone
           val (bt, bc) = files.partition(f => FileStats.touches(
             FileStats.withPartitionStats(f, meta, zone), bounds))
@@ -759,12 +778,14 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   }
 
   /** Encoded min/max/has-null of each merge-key column over the source —
-    * the probe side of the touched-file split. Bounds become `unknown`
-    * (match everything) for unsupported types or unencodable values. */
+    * the probe side of the touched-file split — and the source's row
+    * count, from the same aggregate. Bounds become `unknown` (match
+    * everything) for unsupported types or unencodable values. */
   private def sourceKeyBounds(src: DataFrame, schema: StructType,
-                              keys: Seq[String]): Map[String, FileStats.KeyBounds] = {
+                              keys: Seq[String]): (Map[String, FileStats.KeyBounds], Long) = {
     val aggs = keys.flatMap(k => Seq(min(col(k)).as(s"__min_$k"),
-      max(col(k)).as(s"__max_$k"), sum(col(k).isNull.cast("long")).as(s"__null_$k")))
+      max(col(k)).as(s"__max_$k"), sum(col(k).isNull.cast("long")).as(s"__null_$k"))) :+
+      count(lit(1)).as("__rows")
     val row = src.agg(aggs.head, aggs.tail: _*).head()
     keys.zipWithIndex.map { case (k, i) =>
       val dt = schema(k).dataType
@@ -781,7 +802,7 @@ final class LakeTable private (spark: SparkSession, val location: String) {
         val nulls = if (row.isNullAt(3 * i + 2)) 0L else row.getLong(3 * i + 2)
         k -> FileStats.KeyBounds(dt, mn, mx, hasNull = nulls > 0, unknown = unknown)
       }
-    }.toMap
+    }.toMap -> row.getLong(3 * keys.size)
   }
 
   private def causeChain(e: Throwable): Seq[String] =
@@ -809,6 +830,15 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     sys.error("unreachable")
   }
 
+  /** The current (version, metadata) and the add-only evolution
+    * `incoming` asks for, NOT committed: the skip-empty write paths commit
+    * it only once rows were written. Incompatible changes still raise here,
+    * before any write. */
+  private def pendingEvolution(incoming: StructType): (Int, TableMetadata, Option[StructType]) = {
+    val (base, meta) = metadataAt
+    (base, meta, SchemaEvolution.evolve(meta.schema, incoming))
+  }
+
   /** Null-fill columns of `schema` missing from df, in schema order. */
   private def alignTo(df: DataFrame, schema: StructType): DataFrame =
     df.select(schema.fields.map { f =>
@@ -823,16 +853,44 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   private def nextSnapshotId(meta: TableMetadata): Long =
     (meta.currentSnapshotId +: meta.snapshots.map(_.id)).max + 1
 
+  /** Write `df` as a new snapshot directory and commit it against
+    * `preEvolved` (default: the current version after an up-front add-only
+    * evolution). A `pendingSchema` evolution commits as its own version
+    * right after the write, ahead of the data — the same history an
+    * up-front evolution leaves. L4 skip-empty, post-write: zero rows
+    * written by an append, or by any write with `skipEmpty`, removes the
+    * directory and commits no data and no pending evolution; `skipEmpty`
+    * still commits `properties`. */
   private def commitData(df: DataFrame, op: String, keepExisting: Boolean,
                          properties: Map[String, String],
                          preEvolved: Option[(Int, TableMetadata)] = None,
-                         carryFiles: Seq[DataFile] = Nil): Unit = {
-    val (base, meta) = preEvolved.getOrElse(evolveIfNeeded(df.schema))
+                         carryFiles: Seq[DataFile] = Nil,
+                         pendingSchema: Option[StructType] = None,
+                         skipEmpty: Boolean = false): Unit = {
+    val (base0, committed) = preEvolved.getOrElse(evolveIfNeeded(df.schema))
+    val meta = pendingSchema.fold(committed)(s => committed.copy(schema = s))
     val snapId = nextSnapshotId(meta)
     val snapRel = writeSnapshotDir(df, op, meta, s"snap-$snapId")
+    val newFiles = newFileEntries(snapRel, meta)
+    if ((skipEmpty || op == "append") && newFiles.forall(_.rowCount == 0)) {
+      deleteRecursively(Paths.get(location, snapRel))
+      if (skipEmpty) commitProperties(properties)
+      return
+    }
+    val base = pendingSchema.fold(base0) { _ =>
+      try { commitCas(base0, meta); base0 + 1 }
+      catch {
+        case e: ConcurrentCommitException =>
+          deleteRecursively(Paths.get(location, snapRel))
+          throw e
+      }
+    }
     commitDataFiles(op, keepExisting, properties, carryFiles,
-      base, meta, snapRel)
+      base, meta, snapRel, newFiles)
   }
+
+  private def commitProperties(properties: Map[String, String]): Unit =
+    if (properties.nonEmpty) writeProperties(properties)
 
   /** Write the delta under a `data/<dirName>` directory (uniquified only
     * when a concurrent writer already claimed the deterministic name) and
@@ -907,15 +965,7 @@ final class LakeTable private (spark: SparkSession, val location: String) {
                               properties: Map[String, String],
                               carryFiles: Seq[DataFile],
                               base0: Int, meta0: TableMetadata,
-                              snapRel: String): Unit = {
-    val newFiles = newFileEntries(snapRel, meta0)
-    // L4 skip-empty, enforced post-write: a zero-row append commits
-    // nothing and leaves no snapshot directory behind. (Post-write, not a
-    // df.isEmpty pre-probe, so the source plan executes exactly once.)
-    if (op == "append" && newFiles.forall(_.rowCount == 0)) {
-      deleteRecursively(Paths.get(location, snapRel))
-      return
-    }
+                              snapRel: String, newFiles: Seq[DataFile]): Unit = {
     var base = base0
     var meta = meta0
     var attempt = 0

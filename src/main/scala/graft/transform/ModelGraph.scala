@@ -66,43 +66,23 @@ final class ModelGraph(models: Seq[Model]) {
     order.toSeq
   }
 
-  /** Run every model in dependency order. `sources` resolves `source()`
-    * names; refs resolve to already-built models. A `sources` entry whose
-    * key names a MODEL splices a fixture in place of that model (dbt
-    * unit-test style, reference `transform/tests/fixtures/` SQL rows) — the
-    * model is not built. When a catalog is given, `materialized="table"` models are
-    * replaced through the table layer with their partition/sort specs and
-    * re-read from storage (CTAS). */
+  /** Run every model in dependency order — `elt transform`, dbt run.
+    * `sources` resolves `source()` names; refs resolve to already-built
+    * models. A `sources` entry whose key names a MODEL splices a fixture in
+    * place of that model (dbt unit-test style, reference
+    * `transform/tests/fixtures/` SQL rows) — the model is not built. When a
+    * catalog is given, `materialized="table"` models are replaced through
+    * the table layer with their partition/sort specs and re-read from
+    * storage (CTAS), and incremental models merge or append their delta;
+    * each model's plan executes once, in its write. */
   def run(spark: SparkSession, sources: Map[String, DataFrame],
           catalog: Option[(LakeCatalog, String, String)] = None,
           targets: Seq[String] = Nil,
-          fullRefresh: Boolean = false): Map[String, DataFrame] = {
-    val built = scala.collection.mutable.Map.empty[String, DataFrame]
-    def resolve(name: String): DataFrame =
-      built.getOrElse(name, sources.getOrElse(name,
-        throw new NoSuchElementException(s"Unknown ref/source: '$name'")))
-
-    // dbt --select style: only the transitive dependency closure of targets
-    val selected: Set[String] =
-      if (targets.isEmpty) byName.keySet.toSet
-      else {
-        val seen = scala.collection.mutable.Set.empty[String]
-        def visit(n: String): Unit =
-          if (byName.contains(n) && seen.add(n)) byName(n).deps.foreach(visit)
-        targets.foreach(visit)
-        seen.toSet
-      }
-
-    topoOrder.filter(selected.contains).foreach { name =>
-      val m = byName(name)
-      if (sources.contains(name)) {
-        built(name) = sources(name) // fixture splice
-      } else {
-      m.deps.foreach(resolve) // fail fast on missing inputs
-      val result = (m.materialized, catalog) match {
+          fullRefresh: Boolean = false): Map[String, DataFrame] =
+    walk(sources, targets) { (m, resolve) =>
+      (m.materialized, catalog) match {
         case ("incremental", Some((cat, wh, ns))) =>
-          val inc = m.incrementalBuild.getOrElse(throw new IllegalStateException(
-            s"Model '${m.name}' is materialized='incremental' but has no incrementalBuild"))
+          val inc = incrementalBuildOf(m)
           val tgtNs = m.schema.getOrElse(ns)
           val existing =
             if (fullRefresh || !cat.tableExists(wh, tgtNs, m.name)) None
@@ -110,7 +90,7 @@ final class ModelGraph(models: Seq[Model]) {
           existing match {
             case None => // first run / --full-refresh: complete build
               val df = inc(spark, resolve, None)
-              val table = cat.ensureTable(spark, wh, m.schema.getOrElse(ns),
+              val table = cat.ensureTable(spark, wh, tgtNs,
                 m.name, df.schema, m.partitionSpec, m.sortOrder)
               table.write(df, "replace")
               table.read()
@@ -132,14 +112,71 @@ final class ModelGraph(models: Seq[Model]) {
             df.schema, m.partitionSpec, m.sortOrder)
           table.write(df, "replace") // on_table_exists = 'drop'/'replace'
           table.read()
-        case _ =>
-          val df = m.build(spark, resolve)
-          df.createOrReplaceTempView(s"graft_model_$name")
-          df
+        case _ => view(spark, m, resolve)
       }
-      built(name) = result
+    }
+
+  /** The models as `elt test` sees them — dbt test queries the relations
+    * `dbt run` left in the warehouse — resolved WITHOUT writing anything.
+    * Table and incremental models read the relation last materialized in
+    * `catalog`; one not materialized yet is built in memory (an
+    * incremental model as its full build). Views, fixture splices and the
+    * `targets` selection behave as in [[run]]. */
+  def resolve(spark: SparkSession, sources: Map[String, DataFrame],
+              catalog: (LakeCatalog, String, String),
+              targets: Seq[String] = Nil): Map[String, DataFrame] = {
+    val (cat, wh, ns) = catalog
+    walk(sources, targets) { (m, resolve) =>
+      val tgtNs = m.schema.getOrElse(ns)
+      m.materialized match {
+        case "table" | "incremental" if cat.tableExists(wh, tgtNs, m.name) =>
+          cat.loadTable(spark, wh, tgtNs, m.name).read()
+        case "incremental" => incrementalBuildOf(m)(spark, resolve, None)
+        case _ => view(spark, m, resolve)
       }
+    }
+  }
+
+  /** The walk [[run]] and [[resolve]] share: the `targets` selection (dbt
+    * --select: the transitive dependency closure; all models when empty)
+    * in topo order, fixture splices, fail-fast on missing inputs, and
+    * `materialize` for every other model. */
+  private def walk(sources: Map[String, DataFrame], targets: Seq[String])(
+      materialize: (Model, String => DataFrame) => DataFrame): Map[String, DataFrame] = {
+    val built = scala.collection.mutable.Map.empty[String, DataFrame]
+    def resolve(name: String): DataFrame =
+      built.getOrElse(name, sources.getOrElse(name,
+        throw new NoSuchElementException(s"Unknown ref/source: '$name'")))
+
+    val selected: Set[String] =
+      if (targets.isEmpty) byName.keySet.toSet
+      else {
+        val seen = scala.collection.mutable.Set.empty[String]
+        def visit(n: String): Unit =
+          if (byName.contains(n) && seen.add(n)) byName(n).deps.foreach(visit)
+        targets.foreach(visit)
+        seen.toSet
+      }
+
+    topoOrder.filter(selected.contains).foreach { name =>
+      val m = byName(name)
+      built(name) =
+        if (sources.contains(name)) sources(name) // fixture splice
+        else {
+          m.deps.foreach(resolve) // fail fast on missing inputs
+          materialize(m, resolve)
+        }
     }
     built.toMap
   }
+
+  private def view(spark: SparkSession, m: Model, resolve: String => DataFrame): DataFrame = {
+    val df = m.build(spark, resolve)
+    df.createOrReplaceTempView(s"graft_model_${m.name}")
+    df
+  }
+
+  private def incrementalBuildOf(m: Model) = m.incrementalBuild.getOrElse(
+    throw new IllegalStateException(
+      s"Model '${m.name}' is materialized='incremental' but has no incrementalBuild"))
 }

@@ -324,8 +324,9 @@ class PipelinesE2eSpec extends AnyFunSuite with SparkSpec {
     assert(out2.toString.contains("power_consumption: 3 rows"))
   }
 
-  test("elt test: the full declared data-test suite runs green end-to-end") {
-    val root = tmpDir("dt_e2e")
+  /** Land all five jobs from fixtures whose data satisfy every declared
+    * data test. */
+  private def landForDataTests(root: String): Unit = {
     writeOpralog(root)
     writeStatusdisplay(root, cyclesJsonSinglePhase)
     writeSharepoint(root)
@@ -334,6 +335,11 @@ class PipelinesE2eSpec extends AnyFunSuite with SparkSpec {
     for (job <- Seq("opralogweb", "statusdisplay", "accelerator_sharepoint",
         "electricity_sharepoint", "moderator_performance"))
       Cli.run(spark, Seq("run", root, job))
+  }
+
+  test("elt test: the full declared data-test suite runs green end-to-end") {
+    val root = tmpDir("dt_e2e")
+    landForDataTests(root)
 
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(out)(Cli.run(spark, Seq("test", root))) // throws on failure
@@ -345,5 +351,25 @@ class PipelinesE2eSpec extends AnyFunSuite with SparkSpec {
     // every suite ran: accelerator + beamlines + estates
     assert(printed.linesIterator.size ==
       graft.transform.DataTests.fullSuite.size)
+  }
+
+  test("elt test after elt transform reads the marts and writes nothing") {
+    val root = tmpDir("dt_readonly")
+    landForDataTests(root)
+    Cli.run(spark, Seq("transform", root))
+    val catalog = new LakeCatalog(s"$root/warehouses")
+    def versions: Map[String, Int] = (for {
+      ns <- Seq("accelerator", "beamlines", "estates")
+      if catalog.namespaceExists("facility_ops", ns)
+      t <- catalog.listTables("facility_ops", ns)
+    } yield s"$ns.$t" -> catalog.loadTable(spark, "facility_ops", ns, t).version).toMap
+    val before = versions
+    assert(before.size >= 4) // cycles, mcr records, power, incident peaks
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Cli.run(spark, Seq("test", root)))
+    assert(versions == before)
+    assert(out.toString.linesIterator.toSeq ==
+      graft.transform.DataTests.fullSuite.map { case (m, t, _) => s"$m $t: PASS" })
   }
 }

@@ -465,6 +465,71 @@ class LakeTableSpec extends AnyFunSuite with SparkSpec {
     assert(names(loc) == Seq("a"))
   }
 
+  /** L4 for replace/merge, checked post-write: a zero-row `write` (whose
+    * frame even carries a new column) changes no version, snapshot, schema
+    * or row and leaves no snapshot directory; given properties, exactly
+    * one metadata-only commit lands them. */
+  private def assertZeroRowWriteSkipped(loc: String, mode: String,
+                                        mergeOn: Seq[String] = Nil): Unit = {
+    val t = LakeTable.load(spark, loc)
+    def state = { val m = t.metadata; (m.snapshots, m.currentSnapshotId, m.schema) }
+    def dataDirs = Option(Paths.get(loc, "data").toFile.list()).toSeq.flatten.sorted
+    def rows = t.read().collect().toSeq.map(_.toString).sorted
+    // a real (non-folded) plan that yields no rows
+    val empty = spark.range(3)
+      .select($"id", $"id".cast("string").as("name"), lit(1.5).as("extra"))
+      .where($"id" < 0)
+    val (v0, s0, d0, r0) = (t.version, state, dataDirs, rows)
+    t.write(empty, mode, mergeOn)
+    assert((t.version, state, dataDirs, rows) == ((v0, s0, d0, r0)), mode)
+    t.write(empty, mode, mergeOn, properties = Map("build" -> "b1"))
+    assert((t.version, state, dataDirs, rows) == ((v0 + 1, s0, d0, r0)), mode)
+    assert(t.readProperty("build") == "b1")
+  }
+
+  test("zero-row replace/merge skip post-write: nothing but properties commits") {
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+    val replaced = tmpDir("lt_empty_replace")
+    LakeTable.ensure(spark, replaced, df.schema).write(df, "append")
+    assertZeroRowWriteSkipped(replaced, "replace")
+    val mergedInto = tmpDir("lt_empty_merge")
+    LakeTable.ensure(spark, mergedInto, df.schema).write(df, "append")
+    assertZeroRowWriteSkipped(mergedInto, "merge", Seq("id"))
+    // merge into a table with no data at all takes the insert-all path
+    val fresh = tmpDir("lt_empty_merge_fresh")
+    LakeTable.ensure(spark, fresh, df.schema, identifierFields = Seq("id"))
+    assertZeroRowWriteSkipped(fresh, "merge")
+    assert(names(replaced) == Seq("a", "b") && names(mergedInto) == Seq("a", "b"))
+    assert(LakeTable.load(spark, fresh).read().count() == 0)
+  }
+
+  test("a wider replace still commits its evolution ahead of the data") {
+    val loc = tmpDir("lt_replace_evolve")
+    val df = Seq((1L, "a")).toDF("id", "name")
+    val t = LakeTable.ensure(spark, loc, df.schema)
+    t.write(df, "append")
+    val (v0, snaps0) = (t.version, t.metadata.snapshots)
+    t.write(Seq((2L, "b", 3.5)).toDF("id", "name", "score"), "replace")
+    // v0+1: schema only; v0+2: the replace snapshot
+    val evolved = TableMetadata.fromJson(new String(Files.readAllBytes(
+      Paths.get(loc, "metadata", s"v${v0 + 1}.json"))))
+    assert(evolved.schema.fieldNames.toSeq == Seq("id", "name", "score"))
+    assert(evolved.snapshots == snaps0)
+    assert(t.version == v0 + 2)
+    assert(t.read().collect().toSeq == Seq(Row(2L, "b", 3.5)))
+  }
+
+  test("replace executes its source plan exactly once") {
+    val evals = spark.sparkContext.longAccumulator("replace_source_evals")
+    val rdd = spark.sparkContext.parallelize(1L to 100L, 2)
+      .map { i => evals.add(1); Row(i, s"v$i") }
+    val src = spark.createDataFrame(rdd, Seq((0L, "")).toDF("id", "name").schema)
+    val t = LakeTable.ensure(spark, tmpDir("lt_replace_once"), src.schema)
+    t.write(src, "replace")
+    assert(t.read().count() == 100)
+    assert(evals.value == 100L, s"source rows evaluated ${evals.value} times, expected 100")
+  }
+
   test("schema evolution on append: new column null-filled for old rows") {
     val loc = tmpDir("lt_evolve")
     val df1 = Seq((1L, "a")).toDF("id", "name")
